@@ -38,7 +38,7 @@ object ExpiryPolicy {
 
   /** Pure-Scala core of the E0/E1/E2 policy over an already-distinct,
     * bounded expiry set (also used by OptionsPipeline, which gathers the
-    * set in the same pass as the spot price).
+    * set in its dedup pass).
     */
   def nearestFromDates(dates: Seq[LocalDate], today: LocalDate, n: Int = 3): Seq[LocalDate] = {
     val distinct = dates.distinct.sorted

@@ -9,9 +9,8 @@ import graft.Schemas
 
 /** End-to-end batch of the options pipeline: the Spark-native re-expression
   * of reference `fetch_eth_options_data` + `calculate_open_and_oi_change`
-  * (main.py:91-330; weekly variant deltaweekly.py). One declarative plan:
-  * parse → band filter → expiry filter → keep-last dedup → broadcast delta
-  * join → canonical sort.
+  * (main.py:91-330; weekly variant deltaweekly.py): parse → band filter →
+  * keep-last dedup → expiry filter → broadcast delta join → canonical sort.
   *
   * The batch timestamp is injected (run-constant, SURVEY.md §7.4) rather
   * than taken from the clock: the reference stamps one wall-clock value per
@@ -36,15 +35,10 @@ object OptionsPipeline {
   def parseSnapshot(raw: DataFrame): DataFrame = dropUnparseable(parseColumns(raw))
 
   /** The parse as a pure PROJECTION — every string→typed conversion, no row
-    * drops (those are [[dropUnparseable]], a cheap NULL-check filter over
-    * this frame's typed columns). Split so runBatch can persist THIS frame:
-    * all per-row string work (symbol tokenization, numeric casts, the
-    * DDMMYY date parse) is evaluated exactly once, at cache materialization,
-    * and every plan above the cache — the expiry-policy pre-pass, the main
-    * pass, the final sort's range sampler — touches only typed columns.
-    * Rows that fail [[Parse.mandatoryPresent]] are kept here (flag column
-    * `mandatory_ok`) because the reference's pass-1 expiry scan sees them
-    * too (main.py:128-141).
+    * drops (those are [[dropUnparseable]]). Rows that fail
+    * [[Parse.mandatoryPresent]] are kept here (flag column `mandatory_ok`)
+    * because the reference's pass-1 expiry scan sees them too
+    * (main.py:128-141).
     */
   def parseColumns(raw: DataFrame): DataFrame =
     raw.select(
@@ -71,7 +65,8 @@ object OptionsPipeline {
       )
       .drop("mandatory_ok")
 
-  /** One scheduled run (reference main(), main.py:353-396).
+  /** One scheduled run (reference main(), main.py:353-396), in canonical
+    * sink order.
     *
     * @param rawTickers raw snapshot (Schemas.ticker shape, with src_seq)
     * @param state      previous sink rows (tail-N read-back; may be empty)
@@ -86,48 +81,54 @@ object OptionsPipeline {
       today: LocalDate,
       batchDate: LocalDate,
       batchTime: LocalTime
-  ): DataFrame = {
-    // Structural choice: persist the PARSED (typed) snapshot, not the raw
-    // strings. The snapshot feeds the policy pre-pass, the main pass, AND
-    // the final sort's range-partition sampler; caching the typed frame
-    // means the source is scanned once per batch and — critically — every
-    // per-row string expression (tokenize, numeric casts, the DDMMYY date
-    // parse) runs exactly once, at cache materialization, inside
-    // whole-stage codegen. Caching the RAW side instead re-evaluates the
-    // parse in every consumer stage above the cache, where it can run
-    // interpreted (measured 100-900 CPU-seconds per q14 batch at sf0.1).
-    // No repartition here: sources own their scan parallelism (GraftSession
-    // sets 8m split bytes; TickerSource repartitions before its string
-    // build — a repartition of the built strings would just re-shuffle
-    // them). Cached blocks spill to disk and are dropped by the
-    // ContextCleaner once the plan is unreferenced.
-    val typed = parseColumns(rawTickers)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val parsed = dropUnparseable(typed)
+  ): DataFrame =
+    Snapshot.canonicalSort(batchRows(rawTickers, state, policy, today, batchDate, batchTime))
 
-    // Expiry-policy pre-pass (reference pass 1, main.py:128-141): the ONLY
-    // driver-side decision input is the distinct parsed expiry set, bounded
-    // by the listing calendar (dozens of dates at any data scale) — a
-    // single-column read of the cached typed frame. Like the reference's
-    // pass 1, rows missing other mandatory fields still contribute their
-    // expiry here.
-    val expiryDf = typed.select(col("expiry"))
-    val (targets, bandPct) = policy match {
-      case Hourly => (ExpiryPolicy.nearestExpiries(expiryDf, today), 7.0)
-      case Weekly => (ExpiryPolicy.fridayExpiries(expiryDf, today), 25.0)
+  /** [[runBatch]]'s rows in no particular order — what
+    * [[graft.sinks.ParquetSink.append]] sorts and numbers in one pass.
+    *
+    * One job pass (plus its shuffle stage) parses, drops unparseable rows,
+    * bands and keep-last dedups the snapshot, and materializes that small
+    * frame. The same pass observes the distinct parsed expiry set BEFORE the
+    * mandatory drop, as the reference's pass 1 does (main.py:128-141); the
+    * policy picks its targets from that set on the driver. The expiry filter
+    * then runs after keep-last, which is exact because `expiry` is a
+    * function of SYMBOL alone: it removes whole keep-last groups.
+    */
+  def batchRows(
+      rawTickers: DataFrame,
+      state: DataFrame,
+      policy: Policy,
+      today: LocalDate,
+      batchDate: LocalDate,
+      batchTime: LocalTime
+  ): DataFrame = {
+    val bandPct = policy match {
+      case Hourly => 7.0
+      case Weekly => 25.0
+    }
+    // Per-row spot (reference main.py:168-172,204): each ticker is banded
+    // against ITS OWN spot_price and emits that value as Future_Price.
+    val typed = parseColumns(rawTickers).observe(ExpirySet, collect_set(col("expiry")).as("expiries"))
+    val dedupedPlan = Snapshot.keepLast(
+      dropUnparseable(typed).where(Snapshot.strikeBand(col("Strike"), col("spot"), bandPct)),
+      Seq("SYMBOL"), "src_seq")
+    val deduped = dedupedPlan.localCheckpoint(eager = true)
+    val expiries = dedupedPlan.queryExecution.observedMetrics.get(ExpirySet) match {
+      case Some(row) => row.getSeq[java.sql.Date](0).map(_.toLocalDate)
+      // adaptive execution prunes a stage that produced no rows from the
+      // final plan, and its observed metric with it; no row survives then
+      case None if deduped.isEmpty => Seq.empty
+      case None =>
+        throw new IllegalStateException(s"the dedup pass reported no '$ExpirySet' metric")
+    }
+    val targets = policy match {
+      case Hourly => ExpiryPolicy.nearestFromDates(expiries, today)
+      case Weekly => ExpiryPolicy.fridayFromDates(expiries, today)
     }
 
-    // Per-row spot (reference main.py:168-172,204): each ticker is banded
-    // against ITS OWN spot_price and emits that value as Future_Price. The
-    // batch-global first-arrival spot (main.py:112-116, Parse.firstSpot) is
-    // only ever logged by the reference — never used for filtering.
-    val banded = parsed
-      .where(Snapshot.strikeBand(col("Strike"), col("spot"), bandPct))
-      .where(Snapshot.expiryIn(col("expiry"), targets))
-
-    val deduped = Snapshot.keepLast(banded, Seq("SYMBOL"), "src_seq")
-
     val stamped = deduped
+      .where(Snapshot.expiryIn(col("expiry"), targets))
       .withColumn("Date", date_format(lit(java.sql.Date.valueOf(batchDate)), "yyyy-MM-dd"))
       .withColumn(
         "Time",
@@ -138,9 +139,11 @@ object OptionsPipeline {
 
     val withDelta = Delta.applyDelta(stamped, Delta.prepareState(state, "state_seq"))
 
-    val cleaned = Seq("Future_Price", "Strike", "Close", "Open")
+    Seq("Future_Price", "Strike", "Close", "Open")
       .foldLeft(withDelta)((df, c) => df.withColumn(c, Snapshot.cleanNumeric(col(c))))
-
-    Snapshot.canonicalSort(cleaned.select(Schemas.sinkColumns.map(col): _*))
+      .select(Schemas.sinkColumns.map(col): _*)
   }
+
+  /** Name of the observed distinct-expiry metric of [[batchRows]]' pass. */
+  private val ExpirySet = "graft_expiry_set"
 }

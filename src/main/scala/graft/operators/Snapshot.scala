@@ -49,12 +49,11 @@ object Snapshot {
       .drop("__rn")
   }
 
-  /** Canonical 3-key sink ordering (reference main.py:236-239,319-322).
-    * A global sort = one range-partitioned exchange; it is the sink's
-    * ordering contract, applied once at the very end.
-    */
-  def canonicalSort(df: DataFrame): DataFrame =
-    df.orderBy(col("Expiry_Date").asc, col("Time").asc, col("SYMBOL").asc)
+  /** Canonical 3-key sink ordering (reference main.py:236-239,319-322). */
+  val canonicalOrder: Seq[Column] = Seq(col("Expiry_Date").asc, col("Time").asc, col("SYMBOL").asc)
+
+  /** [[canonicalOrder]] as a global sort (one range-partitioned exchange). */
+  def canonicalSort(df: DataFrame): DataFrame = df.orderBy(canonicalOrder: _*)
 
   /** NaN/±Inf → NULL cleanup before the sink (reference
     * clean_dataframe_for_json, main.py:33-41, applied main.py:338).

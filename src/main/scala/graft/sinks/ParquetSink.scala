@@ -1,52 +1,40 @@
 package graft.sinks
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+
+import graft.operators.Snapshot
 
 /** Parquet sink + bounded state read-back (SURVEY.md §2.1).
   *
   * Replaces the reference's Google-Sheets append (main.py:332-351) and
   * `get_all_records().tail(300)` state read (main.py:252-264). The sheet was
-  * both sink and state store; here the sink is append-mode parquet and the
-  * state read is the last-N rows by an explicit `sink_seq` ordering column —
-  * pandas `tail` order becomes explicit, shuffle-deterministic ordering
-  * (SURVEY.md §7.4).
-  *
-  * Scale: the sink is PARTITIONED BY batch_id, so the tail-N read prunes to
-  * the newest partition(s) — O(tail) I/O per batch instead of O(history):
-  * an unpartitioned sink re-scans its entire accumulated life to keep 300
-  * rows, which at 100× sink age is the dominant cost of every micro-batch.
-  * Partition selection walks batch directories newest-first, accumulating
-  * footer-metadata row counts until ≥ n, then takes the tail via
-  * orderBy(desc).limit(n) — a TakeOrderedAndProject over only the selected
-  * partitions, never a global window over history.
+  * both sink and state store; here the sink is append-mode parquet
+  * PARTITIONED BY batch_id, and the state read is the last-N rows by an
+  * explicit `sink_seq` ordering column (SURVEY.md §7.4).
   */
 object ParquetSink {
 
-  /** Append a batch, stamping a monotone per-batch sequence so read-back can
-    * reconstruct append order across files: sink_seq = batchId * 2^32 + row
-    * position within the batch's canonical order.
+  /** Append a batch in canonical order (Expiry_Date, Time, SYMBOL),
+    * stamping `sink_seq = batchId * 2^32 + 1-based canonical position` so
+    * read-back can reconstruct append order across files.
     *
-    * Scale: a partition-less `row_number` window would funnel the whole
-    * batch through ONE task. Instead the batch is canonically sorted (a
-    * range-partitioned exchange that keeps all tasks busy) and then numbered
-    * with `zipWithIndex`, which assigns globally consecutive indices from
-    * per-partition counts — one tiny O(#partitions) driver round-trip, no
-    * single-task stage, order identical to the sorted DataFrame's.
+    * The batch is sorted and numbered in ONE single-partition pass: a
+    * batch is at most the listed contracts of ≤3 expiries after keep-last
+    * by SYMBOL (~100 rows per hourly tick), so one task sorts it and
+    * `monotonically_increasing_id` (partition 0 → 0, 1, 2, …) numbers it —
+    * no range sampler, no RDD round trip.
     */
   def append(df: DataFrame, path: String, batchId: Long): Unit = {
-    val spark = df.sparkSession
-    val sorted = df.orderBy(col("Expiry_Date").asc, col("Time").asc, col("SYMBOL").asc)
-    val schema = org.apache.spark.sql.types.StructType(
-      sorted.schema.fields :+
-        org.apache.spark.sql.types.StructField("sink_seq", org.apache.spark.sql.types.LongType)
-    )
     val base = batchId * (1L << 32)
-    val rows = sorted.rdd
-      .zipWithIndex()
-      .map { case (r, i) => org.apache.spark.sql.Row.fromSeq(r.toSeq :+ (base + i + 1L)) }
-    spark
-      .createDataFrame(rows, schema)
+    df.coalesce(1)
+      .sortWithinPartitions(Snapshot.canonicalOrder: _*)
+      .withColumn("sink_seq", lit(base + 1L) + monotonically_increasing_id())
       .withColumn("batch_id", lit(batchId))
       .write
       .mode("append")
@@ -57,43 +45,48 @@ object ParquetSink {
   /** Last `n` appended rows (reference tail(300), main.py:260), renamed
     * `state_seq` for Delta.prepareState.
     *
-    * Partition-pruned: only the newest batch_id directories whose
-    * cumulative row counts reach `n` are read (counts are parquet footer
-    * metadata — no data pages touched), and the tail over that bounded
-    * slice is orderBy(sink_seq desc).limit(n), which plans as
-    * TakeOrderedAndProject (per-partition top-N, one bounded merge) — no
-    * global single-partition window, no full-history scan. Driver state
-    * is one (batch_id, count) pair per selected partition, bounded by
-    * ceil(n / min-batch-rows) non-empty batches. A pre-partitioning
-    * legacy sink (no batch_id= directories) falls back to the full scan
-    * with the same tail semantics.
+    * The newest `batch_id=` directories whose footer row counts reach `n`
+    * are picked on the driver, and the read schema comes from one of their
+    * footers, so picking and planning start no Spark job. The tail is
+    * `orderBy(sink_seq desc).limit(n)` over the picked files only — a
+    * TakeOrderedAndProject, never a window over history. A legacy sink
+    * without batch directories is read whole with the same tail semantics.
     */
   def readStateTail(spark: SparkSession, path: String, n: Int = 300): DataFrame = {
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
     val batchDirs = fs
-      .listStatus(hPath)
+      .listStatus(root)
       .toSeq
       .filter(st => st.isDirectory && st.getPath.getName.startsWith("batch_id="))
       .flatMap(st =>
         st.getPath.getName.stripPrefix("batch_id=").toLongOption.map(_ -> st.getPath))
       .sortBy { case (id, _) => -id }
-    val slice =
-      if (batchDirs.isEmpty) spark.read.parquet(path) // legacy unpartitioned sink
-      else {
-        val picked = scala.collection.mutable.ArrayBuffer.empty[String]
-        var acc = 0L
-        val it = batchDirs.iterator
-        while (acc < n && it.hasNext) {
-          val dir = it.next()._2.toString
-          picked += dir
-          acc += spark.read.parquet(dir).count() // footer metadata only
-        }
-        spark.read
-          .option("basePath", path)
-          .parquet(picked.toSeq: _*)
-          .drop("batch_id")
+    val toSpark = new ParquetToSparkSchemaConverter(spark.sessionState.conf)
+    val files = scala.collection.mutable.ArrayBuffer.empty[Path]
+    var schema = Option.empty[StructType]
+    var acc = 0L
+    val it = batchDirs.iterator
+    while (acc < n && it.hasNext) {
+      val dataFiles = fs
+        .listStatus(it.next()._2)
+        .filter(st => st.isFile && !st.getPath.getName.startsWith(".") && !st.getPath.getName.startsWith("_"))
+        .map(_.getPath)
+      dataFiles.foreach { f =>
+        val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
+        try {
+          acc += reader.getRecordCount
+          if (schema.isEmpty)
+            schema = Some(toSpark.convert(reader.getFileMetaData.getSchema))
+        } finally reader.close()
       }
+      files ++= dataFiles
+    }
+    val slice = schema match {
+      case Some(s) => spark.read.schema(s).parquet(files.map(_.toString).toSeq: _*)
+      case None    => spark.read.parquet(path) // legacy unpartitioned sink: no batch files
+    }
     slice
       .orderBy(col("sink_seq").desc)
       .limit(n)

@@ -63,7 +63,7 @@ import graft.operators.Cluster
   * re-cluster-from-scratch alternative pays the full history's edge count
   * every batch AND its original diameter). Labels are localCheckpoint'd
   * (truncated lineage, the §8.9 rule) so batch i's plan does not re-plan
-  * batches 1..i−1.
+  * batches 1..i−1, and carry no size estimate from earlier batches.
   */
 object ComponentsStream {
 
@@ -121,7 +121,12 @@ object ComponentsStream {
         .where(col("id") === col("comp"))
         .join(comps.select(col("id")), Seq("id"), "left_anti")
         .select(col("id"), col("id").as("comp"))
-      labels = comps.unionByName(carried).localCheckpoint(true)
+      // a checkpoint keeps its source plan's size estimate, and Catalyst
+      // multiplies estimates through joins: carried from epoch to epoch the
+      // estimate compounds until planning stalls in BigInt products.
+      // Re-wrapping the checkpointed rows starts each epoch from a flat one.
+      val folded = comps.unionByName(carried).localCheckpoint(true)
+      labels = spark.createDataFrame(folded.rdd, labelSchema)
       store.foreach(_.save(epochId, Map("labels" -> labels)))
     }
   }

@@ -14,11 +14,11 @@ import graft.sinks.ParquetSink
   *
   * Each micro-batch IS one reference run: `foreachBatch` executes the full
   * batch lifecycle — read the sink's tail-N back as state (the sheet
-  * re-read, main.py:252-264), run [[OptionsPipeline.runBatch]], append the
-  * result with a monotone `sink_seq` ([[ParquetSink.append]]). The sink
-  * doubles as the state store exactly as the reference's sheet does, so
-  * consecutive micro-batches chain Open/OI_Change the same way consecutive
-  * cron runs do.
+  * re-read, main.py:252-264), run [[OptionsPipeline.batchRows]], append the
+  * result in canonical order with a monotone `sink_seq`
+  * ([[ParquetSink.append]]). The sink doubles as the state store exactly as
+  * the reference's sheet does, so consecutive micro-batches chain
+  * Open/OI_Change the same way consecutive cron runs do.
   *
   * What streaming adds over cron (SURVEY.md §2.5): checkpointed batch ids
   * give at-least-once with idempotent re-append detection hooks, and the
@@ -27,10 +27,9 @@ import graft.sinks.ParquetSink
   * runBatch takes `batchDate`/`batchTime` instead of reading the wall
   * clock, §7.4).
   *
-  * Scale: everything inside the batch is the runBatch plan (typed-parse
-  * cache, broadcast delta join); the state read is a bounded top-N. The
-  * one cross-batch serialization point is the sink append — inherent to
-  * the reference's chain-through-the-sink design, not to this adapter.
+  * Scale: a batch is one parse-and-dedup pass over the snapshot, a top-N
+  * state read over the newest sink files, and a single-task append of the
+  * deduped rows — a handful of Spark jobs whatever the sink's age.
   */
 object PipelineStream {
 
@@ -86,7 +85,7 @@ object PipelineStream {
           .select("SYMBOL", "Close", "OI", "state_seq")
       else ParquetSink.emptyState(spark)
     val (today, batchDate, batchTime) = clock()
-    val out = OptionsPipeline.runBatch(batch, state, policy, today, batchDate, batchTime)
+    val out = OptionsPipeline.batchRows(batch, state, policy, today, batchDate, batchTime)
     ParquetSink.append(out, sinkPath, batchId)
   }
 }

@@ -158,4 +158,29 @@ class ComponentsStreamSpec extends SparkSpec {
       }
     } finally query.stop()
   }
+
+  test("carried labels keep a flat size estimate: ten persisted epochs fold without a planning stall") {
+    implicit val sqlCtx = spark.sqlContext
+    val state = java.nio.file.Files.createTempDirectory("ccstream-stats").toString
+    val input = MemoryStream[Edge]
+    val m = new ComponentsStream.Maintainer(spark, Some(state))
+    val query = ComponentsStream.start(input.toDS(), m)
+    val all = scala.collection.mutable.ArrayBuffer.empty[Edge]
+    try {
+      var prevSize = Option.empty[BigInt]
+      (1 to 10).foreach { e =>
+        // a growing chain plus one fresh pair per epoch
+        val b = Seq(Edge(e.toLong, e + 1L), Edge(100L + 2 * e, 101L + 2 * e))
+        all ++= b
+        input.addData(b: _*)
+        query.processAllAvailable()
+        // checked every epoch, so a compounding estimate fails here instead
+        // of stalling the later epochs' planning
+        val size = m.current.queryExecution.optimizedPlan.stats.sizeInBytes
+        prevSize.foreach(p => assert(size <= p, s"labels' size estimate grew at epoch $e: $p -> $size"))
+        prevSize = Some(size)
+      }
+      assert(currentLabels(m) === batchLabels(all.toSeq))
+    } finally query.stop()
+  }
 }

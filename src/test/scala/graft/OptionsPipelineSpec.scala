@@ -192,6 +192,30 @@ class OptionsPipelineSpec extends SparkSpec {
     assert(lt.count() === 2L)
   }
 
+  test("expiry targets come from every parsed row, before the mandatory, band and dedup drops (pass 1)") {
+    // in-band survivors only carry expiries 17 and 19, but the pass-1 set
+    // also holds 16 (out of band) and 18 (missing strike): E0-E2 = 16,17,18
+    val rows = Seq(
+      (s"C-ETH-100-$d17", "call_options", "100", "100.0", "1.0", "10", 1L),
+      (s"C-ETH-200-$d16", "call_options", "200", "100.0", "1.0", "10", 2L), // out of band
+      (s"C-ETH--$d18", "call_options", "", "100.0", "1.0", "10", 3L), // missing strike
+      (s"C-ETH-100-$d19", "call_options", "100", "100.0", "1.0", "10", 4L) // 4th expiry → dropped
+    )
+    val out = OptionsPipeline.runBatch(
+      toDf(rows), ParquetSink.emptyState(spark), OptionsPipeline.Hourly,
+      today, LocalDate.of(2025, 10, 15), LocalTime.of(10, 0, 0))
+    assert(out.collect().map(_.getString(0)).toSeq === Seq(s"C-ETH-100-$d17"))
+  }
+
+  test("a failing dedup pass raises instead of waiting for its expiry set") {
+    val raw = toDf(batch("8.5", "80")).withColumn("strike_price", raise_error(lit("boom")))
+    val e = intercept[Exception] {
+      OptionsPipeline.runBatch(raw, ParquetSink.emptyState(spark), OptionsPipeline.Hourly,
+        today, LocalDate.of(2025, 10, 15), LocalTime.of(10, 0, 0))
+    }
+    assert(e.toString.contains("boom") || Option(e.getCause).exists(_.toString.contains("boom")), e.toString)
+  }
+
   test("flagship entry returns rows on sf0.001") {
     val raw = TickerSource.syntheticFromLineitem(spark, "/root/testdata/sf0.001")
     val out = OptionsPipeline.runBatch(

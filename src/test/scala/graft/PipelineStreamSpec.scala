@@ -139,4 +139,28 @@ class PipelineStreamSpec extends SparkSpec {
       assert(a2.getLong(a2.fieldIndex("OI_Change")) === 5L)
     } finally query.stop()
   }
+
+  test("runOne: canonical order and exact sink_seq, empty batch appends nothing, nothing left cached") {
+    val sink = java.nio.file.Files.createTempDirectory("graft_runone_sink").toString + "/data"
+    def frame(rows: Seq[RawTick]) =
+      rows.map(t => (t.symbol, t.contract_type, t.strike_price, t.spot_price, t.mark_price, t.oi_contracts, t.src_seq))
+        .toDF("symbol", "contract_type", "strike_price", "spot_price", "mark_price", "oi_contracts", "src_seq")
+    def run(rows: Seq[RawTick], batchId: Long): Unit =
+      PipelineStream.runOne(frame(rows), sink, OptionsPipeline.Hourly,
+        () => (today, today, LocalTime.of(10, 0, 0)), 300, batchId)
+
+    spark.catalog.clearCache()
+    run(batch("8.5", "80", 0L), 1L)
+    run(batch("9.0", "85", 10L), 2L)
+    run(Seq.empty, 3L)
+    assert(spark.sharedState.cacheManager.isEmpty, "runOne left a cached plan behind")
+
+    val rows = spark.read.parquet(sink).collect()
+      .map(r => (r.getAs[Long]("sink_seq"), r.getAs[String]("SYMBOL"), r.getAs[Double]("Open")))
+      .sortBy(_._1).toSeq
+    val b1 = 1L << 32; val b2 = 2L << 32
+    assert(rows === Seq(
+      (b1 + 1, s"C-ETH-100-$d17", 0.0), (b1 + 2, s"P-ETH-95-$d17", 0.0),
+      (b2 + 1, s"C-ETH-100-$d17", 8.5), (b2 + 2, s"P-ETH-95-$d17", 2.0)))
+  }
 }

@@ -59,6 +59,53 @@ class ScheduledRunnerSpec extends SparkSpec {
     tick(LocalTime.of(12, 0, 0))
     assert(spark.read.parquet(sink).count() === 4)
   }
+
+  // a chain over four expiries with a duplicated symbol, an out-of-band
+  // strike and a malformed symbol, its marks moving from tick to tick
+  private def chain(k: Int): Seq[RawTick] = {
+    val seq = 100L * k
+    Seq("161025", "171025", "181025", "241025").zipWithIndex.flatMap { case (d, i) =>
+      Seq(
+        RawTick(s"C-ETH-100-$d", "call_options", "100", "100.0", s"${5 + k}.5", s"${40 + k}", seq + 10 * i),
+        RawTick(s"P-ETH-96-$d", "put_options", "96", "100.0", s"${2 + k}.0", s"${20 + i}", seq + 10 * i + 1),
+        RawTick(s"C-ETH-100-$d", "call_options", "100", "100.0", "0.1", "1", seq + 10 * i - 1), // older dup
+        RawTick(s"C-ETH-120-$d", "call_options", "120", "100.0", "1.0", "1", seq + 10 * i + 2) // out of band
+      )
+    } :+ RawTick("BAD-SYM", "call_options", "100", "100.0", "1.0", "1", seq + 99)
+  }
+
+  test("a warm tick runs at most 6 Spark jobs and leaves nothing cached") {
+    val root = java.nio.file.Files.createTempDirectory("graft_sched_jobs").toString
+    val snapDir = s"$root/snapshots"
+    val sink = s"$root/sink/data"
+    val ckpt = s"$root/ckpt"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    spark.catalog.clearCache()
+    spark.sparkContext.addSparkListener(listener)
+    val perTick = try (1 to 5).map { k =>
+      chain(k).toDF().write.mode("append").parquet(snapDir)
+      org.apache.spark.GraftTestBridge.drainListenerBus(spark.sparkContext)
+      jobs.set(0)
+      ScheduledRunner.runTick(
+        spark, OptionsPipeline.Hourly, snapDir, sink, ckpt,
+        Trigger.AvailableNow(), () => (today, today, LocalTime.of(9 + k, 0, 0)))
+      org.apache.spark.GraftTestBridge.drainListenerBus(spark.sparkContext)
+      jobs.get()
+    } finally spark.sparkContext.removeSparkListener(listener)
+
+    // every tick appended its batch: 3 nearest expiries x 2 in-band contracts
+    val all = spark.read.parquet(sink)
+    assert(all.count() === 5 * 6)
+    // and chained through the sink tail: tick 5 against tick 4's close/OI
+    val last = all.where(s"Time = '14:00:00' AND SYMBOL = 'C-ETH-100-171025'").collect()
+    assert(last.map(r => (r.getAs[Double]("Open"), r.getAs[Long]("OI_Change"))).toSeq === Seq((9.5, 1L)))
+    assert(perTick.drop(2).forall(_ <= 6), s"jobs per tick: ${perTick.mkString(", ")}")
+    assert(spark.sharedState.cacheManager.isEmpty, "a tick left a cached plan behind")
+  }
 }
 
 object ScheduledRunnerSpec {
